@@ -126,10 +126,10 @@ def _shingle_index_intersections(
 ) -> DataFrame:
     """Shared scaffold of the exact pair generators
     (:func:`ngram_jaccard_pairs`, :func:`ngram_containment_pairs`):
-    hashed-shingle posting list (PERSISTED — it feeds the df-frequency
-    cap, the size derivation, and both self-join sides; without the
-    persist the tokenize→shingle scan runs 4×), optional ``max_df``
-    stop-phrase cap, and the inverted-index intersection counts.
+    hashed-shingle posting list (PINNED — it feeds both self-join
+    sides, and under ``max_df`` the df-frequency cap too), optional
+    ``max_df`` stop-phrase cap, and the inverted-index intersection
+    counts.
     Returns ``inter`` = ``(id_a, id_b, intersection, __na, __nb)`` with
     ``id_a < id_b`` — the per-doc (capped) set sizes are CARRIED on the
     posting rows through the self-join and surface via ``first()`` in
@@ -214,11 +214,15 @@ def ngram_jaccard_pairs(
     shingle string: the shuffled join key is 8 bytes instead of ~n words,
     and the equality compare is a long compare.  (64-bit collisions would
     merge two shingles globally — odds ~N²/2⁶⁵, ignorable at any corpus
-    size we target.)  The posting list is persisted BEFORE the df-frequency
-    branch: it feeds the frequency count, the doc-size aggregate, and both
-    sides of the self-join — without the persist the tokenize→shingle scan
-    runs 4×, which is the difference between one pass and four over the
-    corpus at 100 TB.
+    size we target.)  Each posting row CARRIES its document's shingle-set
+    size through the self-join, so no size table is aggregated and joined
+    back onto the pairs.  Without ``max_df`` the size is the length of the
+    (distinct) shingle array, and one pinned posting list feeds both sides
+    of the self-join: the tokenize→shingle scan runs once, not twice.
+    With ``max_df`` a first pin feeds the df count and the stop-phrase
+    anti-join, and the capped posting with its re-counted sizes is a
+    second pin feeding both self-join sides (details in
+    :func:`_shingle_index_intersections`).
 
     ``min_partitions``: shingling is CPU-bound; when the input arrives in
     fewer partitions than cores (e.g. one small parquet file), pass the

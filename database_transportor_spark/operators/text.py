@@ -1395,11 +1395,26 @@ def bm25_index_layout(
         return n
 
 
-#: stats-mode query-term sets up to this size inline as IN literals (the
-#: plan parquet file-skipping needs); larger batches fall back to a
-#: broadcast semi-join so the driver never collects an unbounded term set
-#: (ADVICE r9)
+#: stats-mode batches of up to this many distinct ``(query id, token)``
+#: pairs are collected to the driver and inlined as literals: the
+#: ``token IN (...)`` filter parquet file skipping needs, plus the df and
+#: query-id lookups that replace both broadcast joins.  Past it, up to
+#: this many distinct tokens still inline as ``IN`` literals beside
+#: broadcast joins; a larger term set keeps a semi-join plan so the
+#: driver never collects an unbounded set (ADVICE r9)
 _STATS_QTERM_CAP = 2048
+
+#: a bounded stats-mode batch over an index of at most this many posting
+#: rows (the live count the staleness guard takes) is scored in ONE
+#: partition: the token-pruned scan is coalesced, so the groupBy and the
+#: rank window need no exchange and the serving action is a single job.
+#: The bound is on the whole index, not on Σ df of the query terms:
+#: coalescing runs the whole upstream scan in one task, and an index
+#: without a token-range layout skips no file for the pushed ``IN``.
+#: ``tools/bm25_local_scale.py`` on a 4-core host, 20-query batch: one
+#: partition 0.78 vs 0.83 s wide at 116k postings, even at 232k, slower
+#: from 465k (1.24 vs 1.10 s; 1.97 vs 1.31 s at 1.16M)
+_STATS_LOCAL_POSTINGS = 200_000
 
 
 def bm25_topk_indexed(
@@ -1426,19 +1441,40 @@ def bm25_topk_indexed(
     ``stats`` (round 9): a :func:`bm25_index_stats` frame.  When given,
     the per-batch full-index re-aggregations are SKIPPED — N/avgdl/df
     come from the stats table, and the index scan itself is pruned to
-    the query terms with a literal ``token IN (...)`` (term sets up to
-    ``_STATS_QTERM_CAP``; larger batches use a broadcast semi-join so
-    the driver never collects an unbounded set), which a
+    the query terms with a literal ``token IN (...)``, which a
     token-sorted/partitioned parquet layout (:func:`bm25_index_layout`)
     turns into real file skipping.  This is the 100 TB serving mode:
     per batch, the engine reads only postings the queries touch.
     Results are identical to the self-derived path when the stats match
     the index (pinned in tests).
 
+    A batch of up to ``_STATS_QTERM_CAP`` distinct ``(query id, token)``
+    pairs is served in this job shape:
+
+    - one scan of ``queries``, collecting those pairs;
+    - one collect of the query terms' stats rows (df plus N, avgdl and
+      ``n_postings``; a ``first()`` only when no query term is in the
+      vocabulary);
+    - the staleness ``count()`` below (2 Spark jobs);
+    - the scoring plan, where df and the term's query ids are literal
+      map lookups instead of joins.  When the live index holds at most
+      ``_STATS_LOCAL_POSTINGS`` posting rows the pruned scan is
+      coalesced to one partition, so the aggregation and rank window
+      need no exchange and the returned frame's action is one job.
+      Legacy stats (no ``n_postings``, so no live count) and larger
+      indexes keep the wide plan.
+
+    A batch past the pair cap whose distinct terms still fit the cap is
+    pruned with the literal ``IN`` and served through broadcast joins.
+    A larger term set (``hybrid_retrieve`` passes a whole corpus) is
+    never collected: its terms prune the scan and the stats through
+    unhinted semi-joins (AQE still broadcasts when the runtime size
+    allows), forfeiting only the literal-pushdown file skipping.
+
     Staleness guard (round 10): when the stats frame carries
     ``n_postings`` it is compared to the live index's posting-row count
-    (metadata-only on a stored parquet index — footer row counts, no
-    data read) BEFORE serving; a mismatch means the index mutated after
+    BEFORE serving (an eager ``count()``: 2 Spark jobs per search, even
+    on a stored parquet index); a mismatch means the index mutated after
     the stats were derived, and idf would silently degrade.  Default is
     to raise; ``allow_stale=True`` downgrades to a warning (the
     serve-through-a-refresh-window escape hatch).  A mutation that
@@ -1448,6 +1484,7 @@ def bm25_topk_indexed(
     skip the check.
     """
     from pyspark.sql import Window
+    from pyspark.sql.types import ArrayType, LongType, MapType, StringType
 
     if k < 1:
         raise ValueError("bm25_topk_indexed: k must be >= 1")
@@ -1462,18 +1499,32 @@ def bm25_topk_indexed(
         .filter(F.col("token") != "")
         .distinct()
     )
+    qids = None  # bounded stats batch: token -> its query ids
     bounded_q = True  # broadcast hints only while the term set is small
+    local = False  # one-partition scoring, only on an index known small
     if stats is not None:
         fresh = "n_postings" in stats.columns
-        srow = stats.select(
-            "n_docs", "avgdl", *(["n_postings"] if fresh else [])
-        ).first()
+        scalars = ["n_docs", "avgdl", *(["n_postings"] if fresh else [])]
+        # the batch's one scan of `queries`, a bounded collect; the
+        # distinct's shuffle keeps the scan parallel
+        pairs = qterms.limit(_STATS_QTERM_CAP + 1).collect()
+        srows = []
+        if len(pairs) <= _STATS_QTERM_CAP:
+            qids = {}
+            for r in pairs:
+                qids.setdefault(r["token"], []).append(r["__qid"])
+            if qids:
+                # every stats row carries the scalars too
+                srows = stats.filter(F.col("token").isin(list(qids))).select(
+                    "token", "df", *scalars).collect()
+        srow = srows[0] if srows else stats.select(*scalars).first()
         if srow is None:
             raise ValueError("bm25_topk_indexed: empty stats table")
         n_docs, avgdl = int(srow["n_docs"]), float(srow["avgdl"])
         if fresh:
             want = int(srow["n_postings"])
-            have = index.count()  # metadata-only on a parquet index
+            have = index.count()  # 2 Spark jobs, even on parquet
+            local = have <= _STATS_LOCAL_POSTINGS
             if have != want:
                 msg = (
                     f"bm25_topk_indexed: stats are STALE — the index has "
@@ -1488,27 +1539,27 @@ def bm25_topk_indexed(
                 import warnings
 
                 warnings.warn(msg, stacklevel=2)
-        # literal IN over the (human-sized) query term set: the ONLY
-        # index touch left is a token-pruned posting scan, and the
-        # broadcast df side shrinks to the query terms too.  A term set
-        # past the cap is never collect()ed — UNHINTED semi-join instead
-        # (forcing a broadcast would materialize the whole set on the
-        # driver, the exact failure the cap prevents; AQE still picks a
-        # broadcast when the runtime size allows).  Forfeits only the
-        # literal-pushdown file skipping, which a giant term set defeats
-        # anyway.
-        qtok_df = qterms.select("token").distinct()
-        qtok = [r["token"]
-                for r in qtok_df.limit(_STATS_QTERM_CAP + 1).collect()]
-        if len(qtok) > _STATS_QTERM_CAP:
-            bounded_q = False
-            dfreq = stats.join(qtok_df, "token", "left_semi").select(
-                "token", "df")
-            tf = tf.join(qtok_df, "token", "left_semi")
+        if qids is not None:
+            dfs = {r["token"]: int(r["df"]) for r in srows}
         else:
-            dfreq = stats.select("token", "df").filter(
-                F.col("token").isin(qtok))
-            tf = tf.filter(F.col("token").isin(qtok))
+            # past the pair cap the distinct terms may still be few:
+            # literal IN over them, broadcast joins.  A term set past the
+            # cap is never collect()ed — UNHINTED semi-joins instead
+            # (forcing a broadcast would materialize the whole set on the
+            # driver, the exact failure the cap prevents; AQE still picks
+            # a broadcast when the runtime size allows)
+            qtok_df = qterms.select("token").distinct()
+            qtok = [r["token"]
+                    for r in qtok_df.limit(_STATS_QTERM_CAP + 1).collect()]
+            if len(qtok) > _STATS_QTERM_CAP:
+                bounded_q = False
+                dfreq = stats.join(qtok_df, "token", "left_semi").select(
+                    "token", "df")
+                tf = tf.join(qtok_df, "token", "left_semi")
+            else:
+                dfreq = stats.select("token", "df").filter(
+                    F.col("token").isin(qtok))
+                tf = tf.filter(F.col("token").isin(qtok))
     else:
         tf = pin(tf)  # consumed thrice: stats, df, and the match join
         dl = tf.select("__id", "dl").distinct()
@@ -1521,9 +1572,11 @@ def bm25_topk_indexed(
         avgdl = float(row["s"]) / float(n_docs)
         dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
     if max_df_ratio is not None:
-        dfreq = dfreq.filter(
-            F.col("df") <= float(max_df_ratio) * float(n_docs)
-        )
+        max_df = float(max_df_ratio) * float(n_docs)
+        if qids is not None:
+            dfs = {t: d for t, d in dfs.items() if d <= max_df}
+        else:
+            dfreq = dfreq.filter(F.col("df") <= max_df)
     idf = F.log(
         (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
@@ -1536,14 +1589,28 @@ def bm25_topk_indexed(
         + F.lit(k1)
         * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
     )
-    qj = F.broadcast(qterms) if bounded_q else qterms
-    dj = F.broadcast(dfreq) if bounded_q else dfreq
-    scored = (
-        tf.join(qj, "token")
-        .join(dj, "token")
-        .groupBy("__qid", "__id")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
-    )
+    if qids is not None:
+        tf = tf.filter(F.col("token").isin(list(dfs)))
+        if local:
+            tf = tf.coalesce(1)
+        df_of = F.create_map(*(
+            c for t, d in dfs.items() for c in (F.lit(t), F.lit(d))
+        )).cast(MapType(StringType(), LongType()))
+        qids_of = F.create_map(*(
+            c for t in dfs
+            for c in (F.lit(t), F.array(*map(F.lit, qids[t])))
+        )).cast(MapType(StringType(),
+                        ArrayType(qterms.schema["__qid"].dataType)))
+        matched = tf.select(
+            "*", df_of[F.col("token")].alias("df"),
+            F.explode(qids_of[F.col("token")]).alias("__qid"),
+        )
+    else:
+        qj = F.broadcast(qterms) if bounded_q else qterms
+        dj = F.broadcast(dfreq) if bounded_q else dfreq
+        matched = tf.join(qj, "token").join(dj, "token")
+    scored = matched.groupBy("__qid", "__id").agg(
+        F.round(F.sum(contrib), 6).alias("score"))
     w = Window.partitionBy("__qid").orderBy(
         F.col("score").desc(), F.col("__id").asc()
     )

@@ -961,13 +961,27 @@ def test_gate_shuffle_partitions_same_decisions_and_conf_restored(
     session default — and must RESTORE the session's
     spark.sql.shuffle.partitions after the run (it is set on the
     micro-batch's cloned session for the duration of each batch)."""
+    key = "spark.sql.shuffle.partitions"
     src, ckpt, cat = _run(spark, tmp_path, "a")
     _write(spark, src, [(1, D1), (2, D2), (3, D3)])
     _write(spark, src, [(10, D10), (11, D11), (12, D12)])
-    before_conf = spark.conf.get("spark.sql.shuffle.partitions")
+    before_conf = spark.conf.get(key)
+    # every frame the gate writes derives from the micro-batch, so its
+    # session is the stream's clone, the one the knob sets
+    seen = []
+    write = cat.write
+
+    def spy(df, *a, **kw):
+        seen.append((df.sparkSession, df.sparkSession.conf.get(key)))
+        return write(df, *a, **kw)
+
+    cat.write = spy
     stream_dedup_gate(spark, src, cat, "clean", "idx", "doc_id", "text",
                       checkpoint=ckpt, shuffle_partitions=2)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before_conf
+    cat.write = write
+    assert seen and all(conf == "2" for _, conf in seen)
+    assert {s.conf.get(key) for s, _ in seen} == {before_conf}
+    assert spark.conf.get(key) == before_conf
     kept = sorted(r["doc_id"] for r in cat.read("clean").collect())
 
     src2, ckpt2, cat2 = _run(spark, tmp_path, "b")

@@ -647,28 +647,71 @@ class TestBM25StatsFreshness:
         legacy = stats.drop("n_postings")
         assert bm25_topk_indexed(upd, q, stats=legacy).count() == 3
 
-    def test_large_query_term_set_falls_back_to_semi_join(self, spark):
+    def test_large_query_term_set_falls_back_to_semi_join(
+            self, spark, monkeypatch):
+        """Every stats-mode plan serves exactly what bm25_topk derives
+        from the text, on the bounded path's edge cases: the
+        single-partition plan (no exchange), the wide plan (an index
+        over _STATS_LOCAL_POSTINGS queried for far fewer postings, or
+        legacy stats), the literal-IN plan past the pair cap and the
+        semi-join fallback past _STATS_QTERM_CAP terms (ADVICE r9)."""
         import database_transportor_spark.operators.text as T
 
         docs = _docs(spark, [
             (1, "alpha beta gamma"), (2, "beta gamma delta"),
-            (3, "delta epsilon"),
+            (3, "delta epsilon"), (4, "beta beta zeta"),
         ])
-        idx = T.bm25_index(docs)
+        # materialized like a stored index, so the plan's exchanges are
+        # the serving path's own
+        idx = T.bm25_index(docs).localCheckpoint()
         stats = T.bm25_index_stats(idx)
-        q = spark.createDataFrame(
-            [(1, "alpha delta"), (2, "beta epsilon zeta")],
-            ["query_id", "query"])
-        want = sorted(map(tuple, T.bm25_topk_indexed(
-            idx, q, k=10, stats=stats).collect()))
-        old = T._STATS_QTERM_CAP
-        T._STATS_QTERM_CAP = 2  # force the ADVICE-r9 semi-join fallback
-        try:
-            got = sorted(map(tuple, T.bm25_topk_indexed(
-                idx, q, k=10, stats=stats).collect()))
-        finally:
-            T._STATS_QTERM_CAP = old
-        assert got == want
+        n_postings = idx.count()
+        cases = {
+            "an empty query string, one term shared by two queries": ([
+                (1, "alpha delta"), (2, "beta epsilon zeta"), (3, ""),
+                (4, "beta gamma"),
+            ], None),
+            "empty query strings only": ([(1, ""), (2, " ")], None),
+            "terms all missing from the vocabulary": (
+                [(1, "omega psi")], None),
+            "max_df_ratio": ([(1, "beta delta"), (2, "zeta")], 0.5),
+        }
+
+        def serve(q, ratio, st=stats):
+            return T.bm25_topk_indexed(
+                idx, q, k=10, stats=st, max_df_ratio=ratio)
+
+        def rows(df):
+            return sorted(map(tuple, df.collect()))
+
+        def plan(df):
+            return df._jdf.queryExecution().executedPlan().toString()
+
+        for name, (data, ratio) in cases.items():
+            q = spark.createDataFrame(data, "query_id long, query string")
+            direct = T.bm25_topk(docs, q, k=10, max_df_ratio=ratio)
+            want = rows(direct)
+            local = serve(q, ratio)
+            assert rows(local) == want, name
+            assert local.dtypes == direct.dtypes, name
+            assert "Exchange" not in plan(local), name
+            # the index is one posting over the constant, Σ df far under
+            monkeypatch.setattr(T, "_STATS_LOCAL_POSTINGS", n_postings - 1)
+            wide = serve(q, ratio)
+            assert rows(wide) == want, name
+            assert ("Exchange" in plan(wide)) == bool(want), name
+            n_tok = len({t for _, s in data for t in s.split()})
+            if sum(len(set(s.split())) for _, s in data) > n_tok:
+                # more (query, token) pairs than the cap, terms within it
+                monkeypatch.setattr(T, "_STATS_QTERM_CAP", n_tok)
+                got = serve(q, ratio)
+                assert rows(got) == want, name
+                assert "LeftSemi" not in plan(got), name
+            monkeypatch.setattr(T, "_STATS_QTERM_CAP", 0)
+            assert rows(serve(q, ratio)) == want, name
+            monkeypatch.undo()
+        assert want, "max_df_ratio case must still match something"
+        assert "Exchange" in plan(serve(q, ratio, stats.drop("n_postings")))
 
     def test_index_layout_clusters_tokens_for_file_skipping(
             self, spark, tmp_path):
