@@ -1369,14 +1369,7 @@ def bm25_index_layout(
             "bm25_index_layout: needs a file catalog (the layout is a "
             f"parquet property); {type(catalog).__name__} has no path()"
         )
-    from contextlib import nullcontext
-
-    lock = (
-        catalog.writer_lock(index_table)
-        if hasattr(catalog, "writer_lock")
-        else nullcontext()
-    )
-    with lock:
+    with catalog.writer_lock(index_table):
         idx = catalog.read(index_table)
         laid = idx.repartitionByRange(files, "token").sortWithinPartitions(
             "token")

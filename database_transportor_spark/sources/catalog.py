@@ -20,6 +20,7 @@ Scale notes
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,6 +83,12 @@ class Catalog:
 
     def abort_staged(self, table: str) -> None:
         """Best-effort cleanup of an uncommitted staging table."""
+
+    def writer_lock(self, table: str):
+        """Context manager serializing writers of ``table`` across a
+        read → stage → commit sequence.  No-op here; catalogs that can
+        lock (``VersionedCatalog``) override it."""
+        return nullcontext()
 
     def is_nonempty(self, table: str) -> bool:
         """Seed validation (S6, DBT.php:512-518): cheap existence probe.

@@ -25,21 +25,12 @@ batch duplicate ids collapse to the lexicographically-smallest text
 that must replace their text are an out-of-band
 ``bm25_index_update(add_docs=...)`` upsert, not an ingest concern.
 
-Exactly-once (round 10 — closes the ADVICE r9 crash window): a batch
-is "applied" only once its SIDECAR commit file exists under
-``<checkpoint>/_dbt_commits/<batch_id>`` — written atomically
-(tmp + rename) AFTER the posting append and stats refresh succeed.
-Every batch's posting rows still carry the checkpoint-namespaced
-``__commit`` marker column; a replayed batch whose sidecar is missing
-but whose marker rows exist is a CRASHED MID-APPEND attempt (the old
-scheme's silent-loss window: some of the batch's files on disk, the
-rest gone) — it is SCRUBBED (one staged rewrite dropping that marker's
-rows) and re-applied from scratch.  Both the scrub and the re-append
-are deterministic, so every crash window converges to the same index.
-The scrub rewrite inherits the CATALOG's swap atomicity: on a
-``VersionedCatalog`` the commit is a pointer move (no loss window at
-all — prefer it for production sinks); a plain ``FileCatalog`` swap
-retains its documented narrow rmtree/rename window.
+Exactly-once: every batch goes through the shared protocol of
+:mod:`._commit` — a batch is applied once its sidecar
+``<checkpoint>/_dbt_commits/<batch_id>`` lands, after the posting
+append and the stats refresh; a replay whose sidecar is missing scrubs
+the crashed attempt's ``__commit``-marked posting rows and redoes the
+batch, so every crash window converges to the same index and stats.
 
 Plan shape per batch: one tokenize/aggregate pass over the BATCH only
 (two batch-sized shuffles: tf, dl), one anti-join against the stored
@@ -49,18 +40,12 @@ append; with ``stats_table=``, plus one posting-table aggregation pass
 corpus' text is never re-read.
 
 Checkpoint placement: the default lives under the target catalog's
-root (``<root>/_checkpoints/...``) when the catalog is file-backed, so
-a drop-the-directory rebuild removes the checkpoint with the data;
-only location-less catalogs fall back to the system temp dir, and a
-pre-round-10 temp-dir default checkpoint is ADOPTED (with a warning)
-rather than silently abandoned to a full source re-scan.  Sidecar
-bookkeeping goes through the Hadoop FileSystem API, so an explicit
-``checkpoint=`` may live on any scheme the cluster mounts (HDFS, s3a,
-file:) — the same places a production ``checkpointLocation`` already
-must.  Either way, a NON-EMPTY commit history whose index table is
-missing fails loudly at start — the silent-empty-index failure mode of
-a dropped-and-recreated table under a surviving checkpoint (ADVICE
-r9).
+root (``<root>/_checkpoints/...``) when the catalog is file-backed (see
+:func:`._commit.default_checkpoint`); an explicit ``checkpoint=`` may
+live on any scheme the cluster mounts.  A non-empty commit history
+whose index table is missing fails loudly at start — the silent-empty-
+index failure mode of a dropped-and-recreated table under a surviving
+checkpoint.
 
 Operations: the sink accrues one file set per micro-batch — the same
 fragmentation curve the gates measured (SCALE.md) — so compact the
@@ -76,62 +61,16 @@ rebuild).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pins import pin_scope
 from ..operators.text import bm25_index, bm25_index_stats
 from ..sources.catalog import Catalog
+from ._commit import (
+    BatchCommit, default_checkpoint, drain, open_stream, require_tables,
+)
 
 __all__ = ["stream_bm25_sink"]
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` through the live JVM — sidecar
-    bookkeeping must work wherever the checkpoint lives (HDFS, s3a,
-    file:), not just on the driver's local disk; a production
-    checkpoint is durable shared storage by definition."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    fs, p = _hadoop_fs(spark, path)
-    return bool(fs.exists(p))
-
-
-def _fs_count_children(spark: SparkSession, dir_path: str) -> int:
-    fs, p = _hadoop_fs(spark, dir_path)
-    if not fs.exists(p):
-        return 0
-    # local Hadoop FS writes .<name>.crc companions — not commits
-    return sum(
-        1 for s in fs.listStatus(p)
-        if not s.getPath().getName().startswith((".", "_"))
-    )
-
-
-def _fs_write_atomic(spark: SparkSession, path: str, data: str) -> None:
-    """Create-then-rename: atomic on HDFS/local; on object stores the
-    rename is copy+delete but the tiny sidecar appears all-or-nothing
-    to the existence probe either way."""
-    fs, p = _hadoop_fs(spark, path)
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".__tmp")
-    fs.mkdirs(p.getParent())
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(data.encode()))
-    finally:
-        out.close()
-    if fs.exists(p):
-        fs.delete(p, False)
-    fs.rename(tmp, p)
 
 
 def stream_bm25_sink(
@@ -163,122 +102,24 @@ def stream_bm25_sink(
     stay out of sync with a batch that counts as committed.  Serve with
     ``bm25_topk_indexed(index, queries, stats=target.read(stats_table))``.
     """
-    if schema is None:
-        try:
-            schema = spark.read.parquet(source_dir).schema
-        except Exception as exc:
-            raise ValueError(
-                "stream_bm25_sink: cannot infer schema from an empty "
-                f"source dir {source_dir!r}; pass schema= explicitly"
-            ) from exc
+    who = "stream_bm25_sink"
+    stream = open_stream(spark, source_dir, schema, transform, who)
     if checkpoint is None:
-        ident = hashlib.sha256(
-            "\x00".join(
-                [os.path.abspath(source_dir), target.identity(),
-                 index_table]
-            ).encode()
-        ).hexdigest()[:16]
-        name = f"bm25_ckpt_{index_table}_{ident}"
-        # default under the catalog root (dies with the data directory);
-        # temp dir only for catalogs with no filesystem location
-        base = (
-            os.path.join(target.root, "_checkpoints")
-            if hasattr(target, "root")
-            else tempfile.gettempdir()
-        )
-        checkpoint = os.path.join(base, name)
-        # migration: a pre-round-10 deployment's default lived in the
-        # system temp dir — keep using it rather than silently starting
-        # a fresh checkpoint and re-listing the entire source history
-        legacy = os.path.join(tempfile.gettempdir(), name)
-        if legacy != checkpoint and os.path.isdir(legacy) \
-                and not os.path.isdir(checkpoint):
-            import warnings
+        checkpoint = default_checkpoint(target, source_dir, "bm25",
+                                        [index_table], who)
+    require_tables(spark, checkpoint, target, [index_table], who)
+    commit = BatchCommit(spark, target, checkpoint, [index_table],
+                         [stats_table] if stats_table else [])
 
-            warnings.warn(
-                f"stream_bm25_sink: adopting the pre-existing legacy "
-                f"default checkpoint {legacy!r}; move it under "
-                f"{checkpoint!r} (and pass checkpoint=) to migrate",
-                stacklevel=2,
-            )
-            checkpoint = legacy
-    ckpt_ns = hashlib.sha256(checkpoint.encode()).hexdigest()[:12]
-    commits_dir = checkpoint.rstrip("/") + "/_dbt_commits"
-    # loud-failure guard: committed batches on record but no index table
-    # means the table was dropped/rebuilt under a surviving checkpoint —
-    # the stream would silently never re-index the already-seen files
-    committed = _fs_count_children(spark, commits_dir)
-    if committed and not target.exists(index_table):
-        raise ValueError(
-            f"stream_bm25_sink: checkpoint {checkpoint!r} records "
-            f"{committed} committed batches but index table "
-            f"{index_table!r} does not exist — it was dropped or rebuilt "
-            "while the checkpoint survived, so already-ingested source "
-            "files would silently never be re-indexed.  Delete the "
-            "checkpoint to re-ingest from scratch, or restore the index."
-        )
-    applied = {"n": 0}
-
-    # lock BOTH tables in sorted order — the same fixed order
-    # gate_maintain uses — so a concurrent maintenance process locking
-    # the same pair can never ABBA-deadlock with a batch
-    lock_keys = sorted({index_table}
-                       | ({stats_table} if stats_table else set()))
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        marker = f"{ckpt_ns}:{batch_id}"
-        sidecar = f"{commits_dir}/{batch_id}"
-        from contextlib import ExitStack
-
-        with ExitStack() as stack:
-            if hasattr(target, "writer_lock"):
-                for t in lock_keys:
-                    stack.enter_context(target.writer_lock(t))
-            stack.enter_context(pin_scope())
-            if _fs_exists(spark, sidecar):
-                return  # fully committed earlier; the replay drains
-            if target.exists(index_table):
-                stored = target.read(index_table)
-                if "__commit" not in stored.columns:
-                    raise ValueError(
-                        f"stream_bm25_sink: index table {index_table!r} "
-                        "exists without the __commit replay-marker column "
-                        "(a batch bm25_index() write?) — appending "
-                        "mixed-schema files would break later reads; "
-                        "seed it once with a staged rewrite: "
-                        "write_staged(read(idx).withColumn('__commit', "
-                        "lit('seed:0')), idx) + commit_staged"
-                    )
-                partial = (
-                    stored
-                    .filter(F.col("__commit") == marker)
-                    .limit(1)
-                    .isEmpty()
-                    is False
-                )
-                if partial:
-                    # crashed mid-append: this batch's marker rows are on
-                    # disk but the sidecar never landed, so the file set
-                    # may be INCOMPLETE — scrub them (null-safe: seeded /
-                    # update-filled rows carry other or NULL markers and
-                    # must survive) and redo the whole batch
-                    target.write_staged(
-                        stored.filter(
-                            ~F.col("__commit").eqNullSafe(F.lit(marker))),
-                        index_table,
-                    )
-                    target.commit_staged(index_table)
+    def _apply(batch: DataFrame, batch_id: int) -> bool:
+        def body(append) -> None:
             # within-batch id collapse: smallest text wins (deterministic)
             docs = batch.groupBy(id_col).agg(
                 F.min(text_col).alias(text_col))
             if target.exists(index_table):
                 seen = target.read(index_table).select(id_col).distinct()
                 docs = docs.join(seen, id_col, "left_anti")
-            rows = bm25_index(docs, id_col, text_col).withColumn(
-                "__commit", F.lit(marker))
-            target.write(rows, index_table, mode="append")
+            append(bm25_index(docs, id_col, text_col), index_table)
             if stats_table is not None:
                 # full re-derivation, not an incremental merge: derived
                 # purely from the post-append index state, it is
@@ -286,22 +127,11 @@ def stream_bm25_sink(
                 # half-committed merge would double-count on replay) and
                 # bit-identical to a rebuild by construction
                 target.write_staged(
-                    bm25_index_stats(
-                        target.read(index_table), id_col),
+                    bm25_index_stats(target.read(index_table), id_col),
                     stats_table,
                 )
                 target.commit_staged(stats_table)
-            _fs_write_atomic(spark, sidecar, marker)  # the commit point
-            applied["n"] += 1
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return applied["n"]
+        return commit.apply(batch_id, body)
+
+    return drain(stream, checkpoint, _apply)

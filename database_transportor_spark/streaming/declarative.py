@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..spec import SpecError
+from ._commit import run_to_completion
 from .events import _scoped_nanos_conf, _stream_reader
 
 __all__ = ["run_stream_spec", "STREAM_SAFE_POST_OPS"]
@@ -315,12 +316,9 @@ def run_stream_spec(
     # complete mode re-emits finalized windows into the memory snapshot;
     # un-aggregated pipelines append rows as they pass the watermark
     mode = sink.get("mode") or ("complete" if aggregating else "append")
-    q = (
+    run_to_completion(
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(name)

@@ -31,14 +31,14 @@ reproducible by a batch computation: batch k's accepted set is a
 closed-form function of the accepted sets before it, which is what the
 oracles compute level by level.
 
-Exactly-once: checkpointed file stream + commit-marker columns on BOTH
-output tables, namespaced by checkpoint (same contract as
-``join_view_sink``).  The index is appended FIRST: a crash between the
-two appends leaves marker rows in the index but none in the clean
-table; the replay excludes current-marker index rows from its probe
-(so a document's own crashed index rows cannot reject it, nor shadow
-the within-batch ordering), recomputes the identical survivor set,
-skips the already-present index append, and lands the clean rows.
+Exactly-once: every batch goes through the shared protocol of
+:mod:`._commit` — both output tables carry the batch's ``__commit``
+marker, the batch counts as applied once its sidecar commit file lands
+after both appends, and a replay without the sidecar scrubs the
+crashed attempt's marker rows from both tables before it recomputes,
+so a crash between or inside the appends converges to the
+uninterrupted run (a document's own crashed index rows can never
+reject it).
 
 Plan shape per batch: one feature pass over the BATCH only, one
 equi-join against the index (shingle-hash keys / centroid buckets —
@@ -48,9 +48,7 @@ probe co-locates), one pair-verify shuffle, and map-only appends.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +56,9 @@ from pyspark.sql import functions as F
 from ..operators.dedup import ngram_shingle_hashes
 from ..operators.pins import pin, pin_scope
 from ..sources.catalog import Catalog
+from ._commit import (
+    BatchCommit, default_checkpoint, drain, open_stream, require_tables,
+)
 
 __all__ = ["gate_maintain", "stream_dedup_gate", "stream_semantic_gate"]
 
@@ -369,18 +370,15 @@ def gate_maintain(
                 "shingle indexes have no codebook (reshard/compact are "
                 "their maintenance ops)"
             )
-    # hold the SAME lock keys a concurrent gate holds (the gates lock
-    # clean_table) plus the index's own; fixed sort order so two
-    # maintenance calls cannot deadlock.  On a VersionedCatalog these
-    # locks are cross-process (flock), so a live ingest gate in another
-    # process is genuinely excluded, not just scheduled around.
-    from contextlib import ExitStack
-
+    # hold the SAME lock keys a concurrent gate holds (its clean and
+    # index tables) in the same sorted order, so the two cannot
+    # deadlock.  On a VersionedCatalog these locks are cross-process
+    # (flock), so a live ingest gate in another process is genuinely
+    # excluded, not just scheduled around.
     lock_keys = sorted({t for t in (clean_table, index_table) if t})
     with ExitStack() as stack:
-        if hasattr(target, "writer_lock"):
-            for t in lock_keys:
-                stack.enter_context(target.writer_lock(t))
+        for t in lock_keys:
+            stack.enter_context(target.writer_lock(t))
         stack.enter_context(pin_scope())
         if reshard is not None:
             idx = target.read(index_table)
@@ -444,20 +442,20 @@ def _run_ingest_gate(
     post_batch=None,
     shuffle_partitions: int | None = None,
 ) -> int:
-    """Shared gate scaffold: schema/checkpoint defaults, the
-    availableNow stream, and per-batch replay / crash-window / append
-    mechanics.  ``make_compute(batch, index_df_or_None)`` returns
+    """Shared gate scaffold: the stream, and each batch's gating
+    computation run through the :mod:`._commit` protocol.
+    ``make_compute(batch, index_df_or_None)`` returns
     ``(rejected, index_rows_for)``: a 1-column ``__id`` frame of batch
     ids to drop, and a callable mapping the kept batch rows to their
     index rows (sans ``__commit``).  ``transform``: optional stateless
     ``DataFrame -> DataFrame`` hook applied to the stream before
-    gating (filter/derive stages).  ``compact_files``: after a batch's
-    appends, if the index table holds more than this many data files,
+    gating (filter/derive stages).  ``compact_files``: after a batch
+    commits, if the index table holds more than this many data files,
     rewrite it via ``compact_table`` (staged swap, partition layout
     preserved) — bounds the per-micro-batch file accrual that probe
     wall tracks.  ``post_batch``: optional no-arg maintenance hook run
-    after each APPLIED batch (still inside the writer lock), e.g. the
-    semantic gate's codebook-retrain milestone check.
+    after each APPLIED batch commits (still inside the writer locks),
+    e.g. the semantic gate's codebook-retrain milestone check.
     ``shuffle_partitions``: size the gating computation's reducers to
     the MICRO-BATCH volume instead of the session default (the same
     caller-sized discipline as the streaming queries'
@@ -477,33 +475,17 @@ def _run_ingest_gate(
                 f"threshold on the index layout); {type(target).__name__} "
                 "has no path()"
             )
-    if schema is None:
-        try:
-            schema = spark.read.parquet(source_dir).schema
-        except Exception as exc:
-            raise ValueError(
-                f"{ckpt_prefix}: cannot infer schema from an empty "
-                f"source dir {source_dir!r}; pass schema= explicitly"
-            ) from exc
-    if checkpoint is None:
-        ident = hashlib.sha256(
-            "\x00".join(
-                [os.path.abspath(source_dir), target.identity(),
-                 clean_table, index_table]
-            ).encode()
-        ).hexdigest()[:16]
-        checkpoint = os.path.join(
-            tempfile.gettempdir(), f"{ckpt_prefix}_ckpt_{clean_table}_{ident}"
-        )
-    ckpt_ns = hashlib.sha256(checkpoint.encode()).hexdigest()[:12]
-    applied = {"n": 0}
-
     if shuffle_partitions is not None and shuffle_partitions < 1:
         raise ValueError(
             f"shuffle_partitions must be >= 1, got {shuffle_partitions}"
         )
-
-    from contextlib import contextmanager
+    stream = open_stream(spark, source_dir, schema, transform, ckpt_prefix)
+    tables = [clean_table, index_table]
+    if checkpoint is None:
+        checkpoint = default_checkpoint(target, source_dir, ckpt_prefix,
+                                        tables, ckpt_prefix)
+    require_tables(spark, checkpoint, target, tables, ckpt_prefix)
+    commit = BatchCommit(spark, target, checkpoint, [index_table, clean_table])
 
     @contextmanager
     def _batch_shuffle_conf(sess):
@@ -523,62 +505,24 @@ def _run_ingest_gate(
         finally:
             sess.conf.set(key, prev)
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        marker = f"{ckpt_ns}:{batch_id}"
-        from contextlib import nullcontext
+    def _post_commit() -> None:
+        if compact_files is not None and (
+            _count_data_files(target, index_table) > compact_files
+        ):
+            from ..operators.maintenance import compact_table
 
-        lock = (
-            target.writer_lock(clean_table)
-            if hasattr(target, "writer_lock")
-            else nullcontext()
-        )
-        with lock, pin_scope(), _batch_shuffle_conf(batch.sparkSession):
-            # ONE catalog probe job answers both replay questions (the
-            # two limit-1 marker scans previously ran as separate jobs
-            # per batch): a marker in the CLEAN table means the batch
-            # fully committed before (skip everything); a marker only in
-            # the INDEX means a crashed attempt landed index rows (skip
-            # the index append, recompute + land the clean rows).  The
-            # probes are read-only, so probing the index before the
-            # compute is equivalent to probing it after.
-            probes = []
-            if target.exists(clean_table):
-                probes.append(
-                    target.read(clean_table)
-                    .filter(F.col("__commit") == marker)
-                    .select(F.lit("clean").alias("__t"))
-                    .limit(1)
-                )
-            index_exists = target.exists(index_table)
-            if index_exists:
-                probes.append(
-                    target.read(index_table)
-                    .filter(F.col("__commit") == marker)
-                    .select(F.lit("idx").alias("__t"))
-                    .limit(1)
-                )
-            found: set = set()
-            if probes:
-                merged = probes[0]
-                for p in probes[1:]:
-                    merged = merged.unionAll(p)
-                found = {r["__t"] for r in merged.collect()}
-            if "clean" in found:
-                return
-            index_has_marker = "idx" in found
-            batch = batch.dropDuplicates([id_col])
-            idx = None
-            if index_exists:
-                # exclude THIS marker's rows: a crashed prior attempt of
-                # this batch must not count as "previously accepted"
-                idx = target.read(index_table).filter(
-                    F.col("__commit") != marker
-                )
-            rejected, index_rows_for = make_compute(batch, idx)
-            # pinned: the kept set feeds BOTH appends (index rows, then
-            # clean rows) plus the index-row projection — without the
+            compact_table(target, index_table)
+        if post_batch is not None:
+            post_batch()
+
+    def _apply(batch: DataFrame, batch_id: int) -> bool:
+        def body(append) -> None:
+            kept_in = batch.dropDuplicates([id_col])
+            idx = (target.read(index_table)
+                   if target.exists(index_table) else None)
+            rejected, index_rows_for = make_compute(kept_in, idx)
+            # pinned: the kept set feeds BOTH appends (clean rows, then
+            # index rows) plus the index-row projection — without the
             # pin the whole gating computation (posting/bucket joins +
             # aggregations) re-executes once per consumer, which was
             # the single largest per-batch cost in profiling.  The
@@ -587,47 +531,23 @@ def _run_ingest_gate(
             # and collapsing it here keeps the anti-join build side
             # reject-set-sized (measured: removing it cost ~2 s/query on
             # the semantic gate at sf0.1)
-            kept = pin(batch.join(
+            kept = pin(kept_in.join(
                 rejected.withColumnRenamed("__id", id_col).distinct(),
                 id_col,
                 "left_anti",
             ))
-            # index first (see module docstring for the crash contract);
-            # skip if a crashed attempt already landed these rows
-            if not index_has_marker:
-                target.write(
-                    index_rows_for(kept).withColumn(
-                        "__commit", F.lit(marker)
-                    ),
-                    index_table,
-                    mode="append",
-                )
-            target.write(
-                kept.withColumn("__commit", F.lit(marker)),
-                clean_table,
-                mode="append",
-            )
-            if compact_files is not None and (
-                _count_data_files(target, index_table) > compact_files
-            ):
-                from ..operators.maintenance import compact_table
+            # clean rows FIRST: an append to a path makes Spark re-cache
+            # every cached plan that reads it, so appending the index
+            # first would recompute the pinned kept set for the clean
+            # append — against an index that already holds this batch's
+            # postings, where every survivor matches itself
+            append(kept, clean_table)
+            append(index_rows_for(kept), index_table)
 
-                compact_table(target, index_table)
-            if post_batch is not None:
-                post_batch()
-            applied["n"] += 1
+        with _batch_shuffle_conf(batch.sparkSession):
+            return commit.apply(batch_id, body, _post_commit)
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return applied["n"]
+    return drain(stream, checkpoint, _apply)
 
 
 def stream_dedup_gate(

@@ -14,6 +14,8 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ._commit import run_to_completion
+
 __all__ = [
     "tumbling_agg",
     "sliding_agg",
@@ -200,14 +202,11 @@ def stream_tumbling_agg(
             "max_value",
         )
     )
-    q = (
+    run_to_completion(
         agg.writeStream.format("memory")
         .queryName(sink_table)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(sink_table)
 
 
@@ -237,14 +236,11 @@ def stream_dedup_count(
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["__k"])
     )
-    q = (
+    run_to_completion(
         deduped.writeStream.format("memory")
         .queryName(sink_table)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(sink_table).select(
         F.count("*").alias("n_unique"),
         F.countDistinct("__k").alias("n_keys"),
@@ -318,14 +314,11 @@ def stream_stateful_totals(
     totals = stream.groupBy(key_col).applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    q = (
+    run_to_completion(
         totals.writeStream.format("memory")
         .queryName(sink_table)
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     # n_events grows monotonically per key, so the snapshot with the highest
     # count is the final state (sum alone isn't monotone if values go
     # negative — hence max_by, not max).
@@ -431,14 +424,11 @@ def stream_interval_join(
         & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {lookback}")),
         "inner",
     )
-    q = (
+    run_to_completion(
         joined.writeStream.format("memory")
         .queryName(sink_table)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(sink_table).select("l_id", "r_id", "l_key", "l_value", "r_value")
 
 
@@ -491,14 +481,11 @@ def stream_enrich_agg(
             "max_value",
         )
     )
-    q = (
+    run_to_completion(
         agg.writeStream.format("memory")
         .queryName(sink_table)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(sink_table)
 
 
@@ -552,14 +539,11 @@ def stream_hist_agg(
         .select(F.col("__w.start").alias("window_start"), key_col,
                 "__b", "__c")
     )
-    q = (
+    run_to_completion(
         agg.writeStream.format("memory")
         .queryName(sink_table)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     # dense-array assembly on the snapshot (group×bin rows, batch side).
     # NULL-valued rows land in a NULL __b group: outside every hist slot
     # (exactly as the conditional-sum leaf scored them) but inside n.

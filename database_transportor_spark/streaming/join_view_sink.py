@@ -9,13 +9,12 @@ is APPENDED to the stored view.  The big shuffle a full re-join would
 pay never happens, per batch or ever; each appended file is view rows
 only.
 
-Exactly-once: the checkpoint makes each source file process once, and a
-crash between the view append and the checkpoint commit is covered by a
-commit-marker column (``__commit`` = checkpoint-hash:batch-id) — a
-replayed batch sees its marker already present and skips, so the
-append-only view never double-counts.  The marker is namespaced by
-checkpoint so a FRESH checkpoint over the same view (a deliberate
-reprocess) is not mistaken for a replay.
+Exactly-once: every batch goes through the shared protocol of
+:mod:`._commit` — its view rows carry the batch's ``__commit`` marker,
+the batch counts as applied once its sidecar commit file lands, and a
+replay without the sidecar scrubs the crashed attempt's marker rows
+before it appends again, so the append-only view never double-counts
+nor keeps half a batch.
 
 Dimension freshness: the dim table is re-read from the catalog at every
 micro-batch, so dim updates enrich all FUTURE batches; rows already in
@@ -33,14 +32,13 @@ appends are the shape object stores love.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import Catalog
+from ._commit import (
+    BatchCommit, default_checkpoint, drain, open_stream, require_tables,
+)
 
 __all__ = ["stream_join_view_sink"]
 
@@ -54,12 +52,10 @@ def stream_join_view_sink(
     on: str | list[str],
     schema=None,
     checkpoint: str | None = None,
-    available_now: bool = True,
-    broadcast_dim: bool = True,
     transform=None,
 ) -> int:
     """Stream fact files from ``source_dir``; append each micro-batch's
-    ``batch ⋈ dim`` rows (inner equi-join on ``on``) to
+    ``batch ⋈ broadcast(dim)`` rows (inner equi-join on ``on``) to
     ``target``/``view_table``, reading ``dim_table`` from the same
     catalog each batch.  Returns the number of micro-batches applied
     (replayed batches count as drained but append nothing).
@@ -67,72 +63,20 @@ def stream_join_view_sink(
     ``transform``: optional stateless ``DataFrame -> DataFrame`` hook
     applied to the fact stream before joining (filter/derive stages).
     """
+    who = "stream_join_view_sink"
     keys = [on] if isinstance(on, str) else list(on)
-    if schema is None:
-        try:
-            schema = spark.read.parquet(source_dir).schema
-        except Exception as exc:
-            raise ValueError(
-                "stream_join_view_sink: cannot infer schema from an empty "
-                f"source dir {source_dir!r}; pass schema= explicitly"
-            ) from exc
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
+    stream = open_stream(spark, source_dir, schema, transform, who)
     if checkpoint is None:
-        ident = hashlib.sha256(
-            "\x00".join(
-                [os.path.abspath(source_dir), target.identity(),
-                 view_table, dim_table]
-            ).encode()
-        ).hexdigest()[:16]
-        checkpoint = os.path.join(
-            tempfile.gettempdir(), f"join_view_ckpt_{view_table}_{ident}"
-        )
-    ckpt_ns = hashlib.sha256(checkpoint.encode()).hexdigest()[:12]
-    applied = {"n": 0}
+        checkpoint = default_checkpoint(target, source_dir, "join_view",
+                                        [view_table, dim_table], who)
+    require_tables(spark, checkpoint, target, [view_table], who)
+    commit = BatchCommit(spark, target, checkpoint, [view_table])
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        marker = f"{ckpt_ns}:{batch_id}"
-        from contextlib import nullcontext
+    def _apply(batch: DataFrame, batch_id: int) -> bool:
+        def body(append) -> None:
+            dim = F.broadcast(target.read(dim_table))
+            append(batch.join(dim, keys, "inner"), view_table)
 
-        lock = (
-            target.writer_lock(view_table)
-            if hasattr(target, "writer_lock")
-            else nullcontext()
-        )
-        with lock:
-            if target.exists(view_table):
-                replayed = (
-                    target.read(view_table)
-                    .filter(F.col("__commit") == marker)
-                    .limit(1)
-                    .isEmpty()
-                    is False
-                )
-                if replayed:
-                    return
-            dim = target.read(dim_table)
-            if broadcast_dim:
-                dim = F.broadcast(dim)
-            delta = batch.join(dim, keys, "inner").withColumn(
-                "__commit", F.lit(marker)
-            )
-            target.write(delta, view_table, mode="append")
-            applied["n"] += 1
+        return commit.apply(batch_id, body)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        if available_now
-        else stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    if available_now:
-        q.awaitTermination()
-    return applied["n"]
+    return drain(stream, checkpoint, _apply)

@@ -9,7 +9,11 @@ provides, built on plain parquet/JDBC catalogs.
 
 Exactness: the checkpoint makes each source file process exactly once;
 a batch replayed after a crash re-merges the same rows — and upsert by
-key is idempotent, so replays cannot duplicate.  Within one batch,
+key is idempotent, so replays cannot duplicate and the sink needs no
+commit marker.  It shares the rest of :mod:`._commit` with the
+appending sinks: the writer lock, the default checkpoint under the
+catalog root, and the start-time refusal to re-bootstrap a missing
+table under a checkpoint with committed batches.  Within one batch,
 ``seq_col`` (LSN / updated_at) picks the newest version of a key.
 
 Scale: per micro-batch cost is one merge aggregation (single shuffle,
@@ -22,13 +26,11 @@ transactional table format.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.mutations import merge_upsert
+from ..operators.mutations import cdc_merge, merge_upsert
 from ..sources.catalog import Catalog
+from ._commit import default_checkpoint, drain, open_stream, require_tables
 
 __all__ = ["stream_merge_sink"]
 
@@ -41,7 +43,6 @@ def stream_merge_sink(
     keys: str | list[str],
     seq_col: str | None = None,
     checkpoint: str | None = None,
-    available_now: bool = True,
     op_col: str | None = None,
     schema=None,
     transform=None,
@@ -65,150 +66,61 @@ def stream_merge_sink(
     stages ahead of the sink.  Must not add stateful operators (the
     foreachBatch apply is the stateful step here).
 
-    ``available_now=True`` drains everything currently unprocessed and
-    returns (incremental batch job — rerun to pick up new files, the
-    checkpoint remembers progress); ``False`` runs until the stream is
-    stopped externally.  Returns the number of micro-batches merged.
+    The run drains everything currently unprocessed and returns (an
+    incremental batch job — rerun to pick up new files, the checkpoint
+    remembers progress).  Returns the number of micro-batches merged.
     """
+    who = "stream_merge_sink"
     if op_col is not None and seq_col is None:
-        raise ValueError("stream_merge_sink: op_col requires seq_col")
-    if schema is None:
-        # bootstrap from existing files; a continuous sink started BEFORE
-        # its producer needs the caller-passed ``schema`` (and skipping
-        # the bootstrap also avoids re-reading every processed file's
-        # footer on restart)
-        try:
-            schema = spark.read.parquet(source_dir).schema
-        except Exception as exc:
-            raise ValueError(
-                "stream_merge_sink: cannot infer schema from an empty "
-                f"source dir {source_dir!r}; pass schema= explicitly"
-            ) from exc
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
+        raise ValueError(f"{who}: op_col requires seq_col")
+    stream = open_stream(spark, source_dir, schema, transform, who)
     if checkpoint is None:
-        # default checkpoint must be unique per (source, target, table):
-        # keyed on the table name alone, a second sink with the same table
-        # but a different source/target would silently reuse a stale
-        # checkpoint and process zero batches
-        import hashlib
+        checkpoint = default_checkpoint(target, source_dir, "merge_sink",
+                                        [table], who)
+    # Spark's own commit log: a merged batch leaves no marker to count
+    require_tables(spark, checkpoint, target, [table], who, log="commits")
 
-        ident = hashlib.sha256(
-            "\x00".join(
-                [os.path.abspath(source_dir), target.identity(), table]
-            ).encode()
-        ).hexdigest()[:16]
-        checkpoint = os.path.join(
-            tempfile.gettempdir(), f"merge_sink_ckpt_{table}_{ident}"
-        )
-    ckpt = checkpoint
-    merged_batches = {"n": 0}
-
-    def _target_exists() -> bool:
-        """First-contact gate.  ``exists()`` is a deterministic metadata
-        probe (never 'False because the read blipped'), and a sink whose
-        checkpoint already committed batches can NEVER be at first
-        contact again — if the target looks absent then, something is
-        wrong (dropped table, wrong catalog) and bootstrapping an empty
-        baseline would REPLACE the table with one micro-batch, silently
-        deleting every previously merged row."""
-        if target.exists(table):
-            return True
-        # Probe the commits dir through the Hadoop FileSystem API (the
-        # same route FileCatalog.exists takes): a checkpoint on hdfs://
-        # or s3a:// is invisible to os.path, and a probe that silently
-        # returned False there would let this guard re-bootstrap an
-        # empty baseline — the exact loss it exists to prevent.
-        jvm = spark._jvm
-        commits = jvm.org.apache.hadoop.fs.Path(
-            ckpt.rstrip("/") + "/commits"
-        )
-        fs = commits.getFileSystem(spark._jsc.hadoopConfiguration())
-        has_commits = fs.exists(commits) and any(
-            not st.getPath().getName().startswith(".")
-            for st in fs.listStatus(commits)
-        )
-        if has_commits:
-            raise RuntimeError(
-                f"stream_merge_sink: checkpoint {ckpt!r} has committed "
-                f"batches but target table {table!r} does not exist — "
-                "refusing to re-bootstrap an empty baseline (that would "
-                "drop all previously merged rows); restore the table or "
-                "start a fresh checkpoint"
-            )
-        return False
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def _apply(batch: DataFrame, batch_id: int) -> bool:
         # the merge below bases itself on the head read here — hold the
-        # catalog's per-table writer lock (when it offers one) across the
-        # whole read→merge→stage→commit sequence so an in-process append
+        # catalog's per-table writer lock across the whole
+        # read→merge→stage→commit sequence so an in-process append
         # racing this batch can neither move the head under the merge nor
         # base ITS union on the pre-commit head and drop this batch's rows
-        from contextlib import nullcontext
-
-        lock = (
-            target.writer_lock(table)
-            if hasattr(target, "writer_lock")
-            else nullcontext()
-        )
-        with lock:
-            _apply_locked(batch, batch_id)
-
-    def _apply_locked(batch: DataFrame, batch_id: int) -> None:
-        if op_col is not None:
-            # cdc_merge, NOT cdc_apply: the target RETAINS the sequence
-            # column, so a stale change arriving in a LATER micro-batch
-            # (out-of-order files) loses against the stored sequence —
-            # cdc_apply's within-batch comparison would let it overwrite
-            # or delete newer data
-            from ..operators.mutations import cdc_merge
-
-            data_cols = [c for c in batch.columns if c != op_col]
+        with target.writer_lock(table):
             live = (
                 target.read(table)
-                if _target_exists()
-                else batch.limit(0).select(*data_cols)
+                if target.exists(table)
+                else batch.limit(0).select(
+                    *[c for c in batch.columns if c != op_col])
             )
-            merged = cdc_merge(
-                live, batch, keys, op_col=op_col, seq_col=seq_col
-            )
-        else:
-            live = (
-                target.read(table)
-                if _target_exists()
-                else batch.limit(0).select(*batch.columns)
-            )
-            # the live side lacks feed-only columns (seq may be feed-only);
-            # merge on the live schema, seq resolves within the batch side
-            merged = merge_upsert(live, batch, keys, seq_col=seq_col)
-        target.write_staged(merged, table)
-        # CDC ↔ versioning convergence: on a VersionedCatalog the commit
-        # IS a version-pointer move, so every micro-batch becomes a
-        # point-in-time snapshot (time travel to any pre-batch state,
-        # rollback = pointer move) and the batch id is recorded in the
-        # commit marker for lineage.  Replay safety carries over: a
-        # checkpoint-replayed batch re-merges idempotently and commits a
-        # version with identical content.
-        from ..sources.versioned import VersionedCatalog
+            if op_col is not None:
+                # cdc_merge, NOT cdc_apply: the target RETAINS the
+                # sequence column, so a stale change arriving in a LATER
+                # micro-batch (out-of-order files) loses against the
+                # stored sequence — cdc_apply's within-batch comparison
+                # would let it overwrite or delete newer data
+                merged = cdc_merge(
+                    live, batch, keys, op_col=op_col, seq_col=seq_col
+                )
+            else:
+                # the live side lacks feed-only columns (seq may be
+                # feed-only); merge on the live schema, seq resolves
+                # within the batch side
+                merged = merge_upsert(live, batch, keys, seq_col=seq_col)
+            target.write_staged(merged, table)
+            # CDC ↔ versioning convergence: on a VersionedCatalog the
+            # commit IS a version-pointer move, so every micro-batch
+            # becomes a point-in-time snapshot (time travel to any
+            # pre-batch state, rollback = pointer move) and the batch id
+            # is recorded in the commit marker for lineage.  Replay
+            # safety carries over: a checkpoint-replayed batch re-merges
+            # idempotently and commits a version with identical content.
+            from ..sources.versioned import VersionedCatalog
 
-        if isinstance(target, VersionedCatalog):
-            target.commit_staged(table, note=f"stream_batch={batch_id}")
-        else:
-            target.commit_staged(table)
-        merged_batches["n"] += 1
+            if isinstance(target, VersionedCatalog):
+                target.commit_staged(table, note=f"stream_batch={batch_id}")
+            else:
+                target.commit_staged(table)
+        return True
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.start()
-        q.awaitTermination()
-    return merged_batches["n"]
+    return drain(stream, checkpoint, _apply)

@@ -148,43 +148,6 @@ def test_stats_table_auto_refresh_matches_rebuild(spark, tmp_path):
     assert served == direct
 
 
-def test_crashed_partial_append_is_scrubbed_and_redone(spark, tmp_path):
-    """ADVICE r9 crash window: marker rows on disk without the batch's
-    commit sidecar are a crashed mid-append — the replay scrubs them and
-    redoes the batch, converging to the clean-run index."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from database_transportor_spark.operators.text import bm25_index
-
-    src = str(tmp_path / "feed7")
-    ckpt = str(tmp_path / "ckpt7")
-    cat = ParquetCatalog(spark, str(tmp_path / "cat7"))
-    _write(spark, src, [(1, "alpha beta"), (2, "beta gamma")])
-    stream_bm25_sink(spark, src, cat, "idx", checkpoint=ckpt)
-    # forge batch 1's partial on-disk state: some rows with its marker,
-    # no sidecar (the exact state a crash mid-parquet-append leaves)
-    ns = hashlib.sha256(ckpt.encode()).hexdigest()[:12]
-    cat.write(
-        spark.createDataFrame(
-            [("INJECTED", 3, 1, 2)], ["token", "doc_id", "tf", "dl"]
-        ).withColumn("__commit", F.lit(f"{ns}:1")),
-        "idx", mode="append")
-    _write(spark, src, [(3, "gamma delta")])
-    n = stream_bm25_sink(spark, src, cat, "idx", checkpoint=ckpt)
-    assert n == 1
-    toks = {r["token"] for r in cat.read("idx").collect()}
-    assert "INJECTED" not in toks  # partial rows scrubbed
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma"), (3, "gamma delta")],
-        ["doc_id", "text"])
-    want = sorted(map(tuple, bm25_index(docs).collect()))
-    got = sorted(map(tuple, cat.read("idx").select(
-        "token", "doc_id", "tf", "dl").collect()))
-    assert got == want
-
-
 def test_dropped_index_with_surviving_checkpoint_fails_loudly(
         spark, tmp_path):
     """ADVICE r9: an index table dropped/rebuilt under a surviving

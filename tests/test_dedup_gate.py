@@ -65,50 +65,6 @@ def test_gate_replay_is_idempotent(spark, tmp_path):
     assert (cat.read("clean").count(), cat.read("idx").count()) == before
 
 
-def test_gate_crash_window_replay(spark, tmp_path):
-    """A crash between the index append and the clean append leaves the
-    next batch's marker rows in the index with no clean rows.  The
-    replay (same checkpoint → same batch id → same marker) must:
-    (a) not let a doc's own crashed postings reject it (self-shadow);
-    (b) skip the posting re-append; (c) land the clean rows."""
-    import hashlib
-
-    from database_transportor_spark.operators.dedup import (
-        ngram_shingle_hashes,
-    )
-
-    src, ckpt, cat = _run(spark, tmp_path)
-    _write(spark, src, [(1, D1), (3, D3)])
-    stream_dedup_gate(spark, src, cat, "clean", "idx", "doc_id", "text",
-                      checkpoint=ckpt)
-
-    # plant the crashed attempt of batch 1: postings for doc 11 tagged
-    # with the marker the replay will recompute (namespace = ckpt hash)
-    ns = hashlib.sha256(ckpt.encode()).hexdigest()[:12]
-    sh = (
-        spark.createDataFrame([(11, D11)], ["doc_id", "text"])
-        .select(
-            F.col("doc_id").alias("__id"),
-            F.explode(ngram_shingle_hashes("text", 3)).alias("__h"),
-        )
-    )
-    counts = sh.groupBy("__id").agg(F.count("*").alias("__n"))
-    planted = sh.join(counts, "__id").withColumn(
-        "__commit", F.lit(f"{ns}:1")
-    )
-    cat.write(planted, "idx", mode="append")
-    idx_before = cat.read("idx").count()
-
-    # the "replayed" batch: 11 again (must NOT be shadowed by its own
-    # crashed postings) and 13, a near-dup batch-mate of 11
-    _write(spark, src, [(11, D11), (13, D11 + " ok")])
-    stream_dedup_gate(spark, src, cat, "clean", "idx", "doc_id", "text",
-                      checkpoint=ckpt)
-    kept = sorted(r["doc_id"] for r in cat.read("clean").collect())
-    assert kept == [1, 3, 11]  # 13 rejected by mate 11; 11 recovered
-    assert cat.read("idx").count() == idx_before  # no double-append
-
-
 def test_gate_rejects_bad_threshold(spark, tmp_path):
     src, ckpt, cat = _run(spark, tmp_path)
     _write(spark, src, [(1, D1)])

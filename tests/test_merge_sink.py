@@ -344,10 +344,10 @@ class TestJoinViewSink:
         assert cat.read("view").count() == 1
 
     def test_replay_marker_skips_double_append(self, spark, tmp_path):
-        """Simulate a replay: second sink run with a FRESH checkpoint but
-        view rows already carrying that checkpoint's markers must still
-        append (different namespace); a same-namespace duplicate must
-        not."""
+        """Simulate a replay: a wiped checkpoint under the SAME path (same
+        marker namespace) re-fires batch 0 without its commit sidecar, so
+        the replay scrubs the batch's marker rows and redoes it — the
+        view must not double-count."""
         import shutil
 
         from database_transportor_spark.streaming.join_view_sink import (
@@ -359,12 +359,12 @@ class TestJoinViewSink:
         self._facts(spark, src, [(1, 10)], 1)
         stream_join_view_sink(spark, src, cat, "view", "dim", "k",
                               checkpoint=ckpt)
-        # crash-replay: wipe ONLY the checkpoint's commits so batch 0
-        # re-fires under the SAME checkpoint path (same namespace)
+        # crash-replay: wipe the checkpoint (Spark's logs and the commit
+        # sidecars) so batch 0 re-fires under the SAME path (namespace)
         shutil.rmtree(ckpt)
         n = stream_join_view_sink(spark, src, cat, "view", "dim", "k",
                                   checkpoint=ckpt)
-        assert n == 0  # marker detected, nothing double-appended
+        assert n == 1  # marker rows scrubbed, batch redone once
         assert cat.read("view").count() == 1
 
     def test_dim_updates_enrich_future_batches_only(self, spark, tmp_path):
